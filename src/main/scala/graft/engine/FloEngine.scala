@@ -5,9 +5,22 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.ns_glob
 import graft.model.{FloSchema, VersionVector}
@@ -25,9 +38,16 @@ import graft.model.{FloSchema, VersionVector}
  * whole files below the requested counters.
  *
  * Scale notes (designed for a real cluster, tested on local):
- *  - produce appends are `repartition(col("partition"))`-ed so one task owns
- *    one partition's files per batch — flo's single-writer-per-partition
- *    discipline (partition/mod.rs:245-278) without any global lock;
+ *  - produce picks its write path by where the request rows live: rows
+ *    already on the driver (the optimized request plan is a
+ *    `LocalRelation`, as for `produceStrings`) are appended from the
+ *    driver with no Spark job, so a one-event append pays no job or
+ *    codegen cost; any other input is `repartition(col("partition"))`-ed
+ *    so one task owns one partition's files per batch — flo's
+ *    single-writer-per-partition discipline (partition/mod.rs:245-278)
+ *    without any global lock. Both commit under the stream's commit lock
+ *    after the writer-lease re-check (the local path by renaming
+ *    `.`-prefixed staged files in), and both ack with the committed rows;
  *  - consume is a declarative scan: vv + glob predicates push into the
  *    parquet reader (pruning + row-group skipping), ordering is only added
  *    at the egress edge where the caller requires total order;
@@ -97,9 +117,14 @@ final class FloEngine(
   // B's re-read sees itself: BOTH win). Same-process acquisition must
   // serialize (the MutationGuard.acquireLocks discipline); cross-process
   // residual windows stay closed at the commit edge by
-  // [[verifyLeaseOwnership]].
+  // [[verifyLeaseOwnership]]. The key is the QUALIFIED lease path, so
+  // engines opened on equivalent spellings of one root (`file:/x`, `/x`)
+  // share one lock.
   private def leaseLock(stream: String): Object =
-    FloEngine.leaseLocks.computeIfAbsent(leasePath(stream).toString, _ => new Object)
+    FloEngine.leaseLocks.computeIfAbsent(leaseLockKey(stream), _ => new Object)
+
+  private[engine] def leaseLockKey(stream: String): String =
+    fs(root).makeQualified(leasePath(stream)).toString
 
   private def leasePath(stream: String) =
     new Path(s"${streamDir(stream)}/${FloEngine.WriterLeaseFile}")
@@ -543,31 +568,53 @@ final class FloEngine(
    * The Spark rendering of `PartitionImpl::append_all`
    * (partition/controller/mod.rs:180-274).
    *
-   * Counter assignment is distributed, gap-free and order-preserving
-   * without a global sort (a window over the whole batch would funnel
-   * everything through one task at 100 TB): a counting pass collects
-   * per-Spark-partition sizes (fused with the rotation byte stats), then
-   * the write pass stamps ids from per-partition prefix-sum offsets —
-   * zipWithIndex's mechanism, minus its separate count job.
+   * Two write paths, chosen by where the request rows live — a structural
+   * choice, not a size threshold or a setting:
+   *  - DRIVER-LOCAL, when the normalized request plan optimizes to a
+   *    `LocalRelation` (`produceStrings` and any `Seq(...).toDF` request:
+   *    Spark folds the normalizing casts into the local rows). The rows
+   *    are collected (a local table scan runs no job), stamped on the
+   *    driver, and written with parquet-hadoop over Spark's own
+   *    `ParquetWriteSupport` — the files the Spark writer would produce,
+   *    with no Spark job at all.
+   *  - DISTRIBUTED, for every other input (checkpointed or file-backed
+   *    frames, streaming micro-batches). Counter assignment is
+   *    distributed, gap-free and order-preserving without a global sort
+   *    (a window over the whole batch would funnel everything through one
+   *    task at 100 TB): a counting pass collects per-Spark-partition sizes
+   *    (fused with the rotation byte stats and the null-partition check),
+   *    then the write pass stamps ids from per-partition prefix-sum
+   *    offsets — zipWithIndex's mechanism, minus its separate count job.
    *
-   * The id range is reserved ATOMICALLY (`getAndAdd`) BEFORE the write —
-   * flo's `HighestCounter::increment_and_get` CAS reservation
+   * Both paths share the request normalization, reject rows with a null
+   * `partition` before anything is reserved, reserve the id range
+   * ATOMICALLY (`getAndAdd`) before the write — flo's
+   * `HighestCounter::increment_and_get` CAS reservation
    * (highest_counter.rs:7-67, partition/controller/mod.rs:192-215) — so
-   * concurrent `produce` calls on one engine get disjoint ranges.
-   * Ack-after-commit applies to VISIBILITY (the returned frame reads the
-   * committed files), not to id assignment; a crash between reservation and
-   * commit leaves a counter gap, which the total order tolerates.
+   * concurrent `produce` calls on one engine get disjoint ranges, and
+   * commit under the stream's commit lock right after
+   * [[verifyLeaseOwnership]]. The local path stages each file under a
+   * `.`-prefixed name inside its `partition=<p>` dir (hidden from Spark
+   * listings and from the engine's `.parquet` filters), renames the
+   * staged files in at that commit edge, and deletes them on any
+   * failure; the distributed path commits through Spark's output
+   * committer. A crash between reservation and commit leaves a counter
+   * gap, which the total order tolerates.
    *
    * Segment rotation: `segmentMaxSizeBytes` is enforced per batch by
-   * deriving `maxRecordsPerFile` from the batch's average row size — one
-   * oversized produce rolls into multiple files per partition, giving the
-   * retention janitor its whole-file drop granularity (the reference rolls
-   * at segment_max_size_bytes, segment/mod.rs:65-74). `maxSegmentDuration`
+   * deriving a per-file row cap from the batch's average row size
+   * ([[maxRecordsPerFile]], one rule for both paths) — one oversized
+   * produce rolls into multiple files per partition, giving the retention
+   * janitor its whole-file drop granularity (the reference rolls at
+   * segment_max_size_bytes, segment/mod.rs:65-74). `maxSegmentDuration`
    * holds structurally: appends never reopen a committed file, so a file's
    * time span is bounded by its batch.
    *
-   * Returns the acked events (with ids and timestamps), like flo's
-   * `AckEvent{op_id, event_id}` carries the assigned id.
+   * Ack: the returned frame holds exactly the committed events, with their
+   * ids and timestamps — like flo's `AckEvent{op_id, event_id}` carries
+   * the assigned id. On the local path it is a `LocalRelation` of those
+   * rows, so collecting the ack runs no job and lists no files; on the
+   * distributed path it reads the committed counter range back.
    */
   def produce(stream: String, requests: DataFrame): DataFrame = {
     if (!streamExists(stream)) throw new NoSuchStream(stream)
@@ -585,36 +632,107 @@ final class FloEngine(
       col("parent_partition").cast("int").as("parent_partition"),
       col("data").cast("binary").as("data"))
 
+    in.queryExecution.optimizedPlan match {
+      case _: LocalRelation => produceLocal(stream, in, counter, now)
+      case _ => produceDistributed(stream, in, counter, now)
+    }
+  }
+
+  /** The driver-local path of [[produce]]: `in` is a local relation. */
+  private def produceLocal(
+      stream: String, in: DataFrame, counter: AtomicLong,
+      now: java.sql.Timestamp): DataFrame = {
+    val rows = in.collect()
+    requireNoNullPartitions(stream, rows.count(_.isNullAt(0)).toLong)
+    val n = rows.length.toLong
+    val perFile = maxRecordsPerFile(stream, n,
+      rows.iterator.map(r => encodedRowBytes(r.getString(1), r.getAs[Array[Byte]](4))).sum)
+    val base = counter.getAndAdd(n)
+    val events = rows.zipWithIndex.map { case (r, i) =>
+      Row(base + 1 + i, r.getInt(0), now, r.get(2), r.get(3), r.get(1), r.get(4))
+    }
+
+    // one file per partition per chunk, rows in counter order — the layout
+    // the distributed path's single writer task per partition produces
+    val f = fs(root)
+    val fileSchema = StructType(
+      StructField("event_counter", LongType, nullable = false) +:
+        StructField("timestamp", TimestampType, nullable = false) +:
+        Seq("parent_counter", "parent_partition", "namespace", "data").map(in.schema(_)))
+    val conf = localWriteConf(fileSchema)
+    val codec = parquetCodec()
+    val job = java.util.UUID.randomUUID()
+    val files = events.groupBy(_.getInt(1)).toSeq.sortBy(_._1).flatMap { case (p, group) =>
+      val chunks = perFile.fold(Iterator.single(group))(m =>
+        group.grouped(math.min(m, Int.MaxValue.toLong).toInt))
+      chunks.zipWithIndex.map { case (chunk, k) =>
+        val dir = s"${streamDir(stream)}/partition=$p"
+        val name = f"part-00000-$job.c$k%03d${codec.getExtension}.parquet"
+        (new Path(dir, s".$name.staged"), new Path(dir, name), chunk)
+      }
+    }
+    val micros = DateTimeUtils.fromJavaTimestamp(now)
+    try {
+      files.foreach { case (staged, _, chunk) =>
+        val writer = new LocalParquetWriterBuilder(HadoopOutputFile.fromPath(staged, conf))
+          .withConf(conf).withCompressionCodec(codec).build()
+        try chunk.foreach { e =>
+          val ns = e.getString(5)
+          writer.write(new GenericInternalRow(Array[Any](e.getLong(0), micros, e.get(3), e.get(4),
+            if (ns == null) null else UTF8String.fromString(ns), e.get(6))))
+        } finally writer.close()
+      }
+      commitLock(stream).synchronized {
+        verifyLeaseOwnership(stream) // last look before files land
+        files.foreach { case (staged, dst, _) =>
+          if (!f.rename(staged, dst))
+            throw new java.io.IOException(s"produce could not commit $staged -> $dst")
+        }
+      }
+    } catch {
+      case e: Throwable =>
+        files.foreach { case (staged, _, _) =>
+          try f.delete(staged, false)
+          catch { case scala.util.control.NonFatal(d) => e.addSuppressed(d) }
+        }
+        throw e
+    }
+    spark.createDataFrame(java.util.Arrays.asList(events: _*), AckSchema)
+  }
+
+  /** The distributed path of [[produce]]: `in` is any non-local frame. */
+  private def produceDistributed(
+      stream: String, in: DataFrame, counter: AtomicLong,
+      now: java.sql.Timestamp): DataFrame = {
     // exactly TWO passes over the cached input (the minimum for gap-free
-    // contiguous ids): one fused counting pass (per-Spark-partition sizes
-    // AND encoded byte totals — what zipWithIndex's internal count job does,
-    // plus the rotation stats for free), then the id-stamping write pass
+    // contiguous ids): one fused counting pass (per-Spark-partition sizes,
+    // encoded byte totals and null partitions — what zipWithIndex's
+    // internal count job does, plus the rotation stats and the request
+    // check for free), then the id-stamping write pass
     in.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val rdd = in.rdd
       val perPart = rdd.mapPartitionsWithIndex { (i, it) =>
         var cnt = 0L
         var bytes = 0L
+        var nullPartitions = 0L
         it.foreach { r =>
           cnt += 1
-          val ns = r.getAs[String]("namespace")
-          val data = r.getAs[Array[Byte]]("data")
-          bytes += 48L + (if (ns == null) 0 else ns.length) +
-            (if (data == null) 0 else data.length)
+          if (r.isNullAt(0)) nullPartitions += 1
+          bytes += encodedRowBytes(r.getAs[String]("namespace"), r.getAs[Array[Byte]]("data"))
         }
-        Iterator.single((i, cnt, bytes))
+        Iterator.single((i, cnt, bytes, nullPartitions))
       }.collect().sortBy(_._1)
+      requireNoNullPartitions(stream, perPart.map(_._4).sum)
 
       val n = perPart.map(_._2).sum
-      val totalBytes = perPart.map(_._3).sum
       val base = counter.getAndAdd(n)
       // exclusive prefix sums: Spark partition i stamps ids
       // (base + starts(i), base + starts(i) + cnt(i)]
       val starts = perPart.map(_._2).scanLeft(0L)(_ + _)
 
-      val schema = org.apache.spark.sql.types.StructType(
-        in.schema.fields :+ org.apache.spark.sql.types.StructField(
-          "event_counter", org.apache.spark.sql.types.LongType, nullable = false))
+      val schema = StructType(
+        in.schema.fields :+ StructField("event_counter", LongType, nullable = false))
       val withIds = spark.createDataFrame(
         rdd.mapPartitionsWithIndex { (i, it) =>
           var c = base + starts(i)
@@ -630,21 +748,54 @@ final class FloEngine(
         col("namespace"),
         col("data"))
 
-      val avgRowBytes = if (n == 0) 48.0 else math.max(1.0, totalBytes.toDouble / n)
-      val maxRecordsPerFile = streamOptions(stream)
-        .map(o => math.max(1L, (o.segmentMaxSizeBytes / avgRowBytes).toLong))
-
       // one writer task per partition per batch (single-writer discipline)
       val writer = events.repartition(col("partition"))
         .write.mode(SaveMode.Append).partitionBy("partition")
-      maxRecordsPerFile.foreach(m => writer.option("maxRecordsPerFile", m))
+      maxRecordsPerFile(stream, n, perPart.map(_._3).sum)
+        .foreach(m => writer.option("maxRecordsPerFile", m))
       commitLock(stream).synchronized {
         verifyLeaseOwnership(stream) // last look before files land
         writer.parquet(streamDir(stream))
       }
+      // canonical envelope order, as the local path's ack (a read puts the
+      // `partition` directory column last)
       consumeRange(stream, base + 1, base + n)
+        .select(FloSchema.eventType.fieldNames.toIndexedSeq.map(col): _*)
     } finally in.unpersist(false)
   }
+
+  /** Segment rotation, one rule for both produce paths: the most rows one
+    * file may hold so it stays near the stream's `segmentMaxSizeBytes`,
+    * from the batch's average encoded row size. None when the stream has
+    * no options file. */
+  private def maxRecordsPerFile(stream: String, n: Long, totalBytes: Long): Option[Long] = {
+    val avgRowBytes = if (n == 0) 48.0 else math.max(1.0, totalBytes.toDouble / n)
+    streamOptions(stream).map(o => math.max(1L, (o.segmentMaxSizeBytes / avgRowBytes).toLong))
+  }
+
+  private def requireNoNullPartitions(stream: String, nulls: Long): Unit =
+    if (nulls > 0) throw new IllegalArgumentException(
+      s"produce to `$stream`: $nulls request row(s) have a null `partition` — " +
+        "every event must name its partition (nothing was reserved or written)")
+
+  /** Hadoop conf for the local path's parquet writer: the session's hadoop
+    * conf plus the SQL settings `ParquetWriteSupport.init` reads (it fails
+    * on any of them missing) and the row schema. */
+  private def localWriteConf(schema: StructType): Configuration = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .foreach(e => conf.set(e.key, spark.conf.get(e.key)))
+    ParquetWriteSupport.setSchema(schema, conf)
+    conf
+  }
+
+  /** The session's parquet codec, named as Spark's writer names it. */
+  private def parquetCodec(): CompressionCodecName =
+    spark.conf.get(SQLConf.PARQUET_COMPRESSION.key).toLowerCase(java.util.Locale.ROOT) match {
+      case "none" => CompressionCodecName.UNCOMPRESSED
+      case c => CompressionCodecName.fromConf(c)
+    }
 
   /**
    * Streaming produce (the reference's async producer client,
@@ -705,7 +856,8 @@ final class FloEngine(
     new BatchCommitTracker(f, new Path(f.makeQualified(p), "_graft_produce_commit"))
   }
 
-  /** Convenience single-partition produce of string payloads. */
+  /** Convenience single-partition produce of string payloads. Its request
+    * is driver-resident, so it always takes [[produce]]'s driver-local path. */
   def produceStrings(stream: String, partition: Int, events: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
     val df = events.toDF("namespace", "payload").select(
@@ -1333,6 +1485,25 @@ object FloEngine {
   val DefaultWriterLeaseTtlMillis: Long = 60000L
 
   private[engine] val log = org.slf4j.LoggerFactory.getLogger(classOf[FloEngine])
+
+  /** Schema of a produce ack: the envelope in canonical order, every column
+    * nullable as a read of the log reports it, so both produce paths return
+    * the same schema. */
+  private val AckSchema = StructType(FloSchema.eventType.map(_.copy(nullable = true)))
+
+  /** Encoded-size estimate of one event for segment rotation. */
+  private def encodedRowBytes(namespace: String, data: Array[Byte]): Long =
+    48L + (if (namespace == null) 0 else namespace.length) +
+      (if (data == null) 0 else data.length)
+
+  /** parquet-hadoop writer over Spark's own row write support, so the local
+    * produce path writes the files Spark's parquet writer would. */
+  private final class LocalParquetWriterBuilder(file: org.apache.parquet.io.OutputFile)
+      extends ParquetWriter.Builder[InternalRow, LocalParquetWriterBuilder](file) {
+    override protected def self(): LocalParquetWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
+  }
 
   /** Footer-statistics max of a long-encoded column (counter, micros
     * timestamp) for one file; None when any row group lacks stats OR the

@@ -1,5 +1,8 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -740,5 +743,204 @@ class FloEngineSpec extends SparkSuite {
     // a glob PATTERN routes to the glob path even when an index exists
     // (an equality probe on the pattern text would match nothing)
     assert(e.consumeIndexed("default", "/topic/t*").count() == 121)
+  }
+
+  // ------------------------------------------- both produce paths, one contract
+
+  /** Produce requests with string payloads and no parent links (a null
+    * partition stays null). */
+  private def requestFrame(rows: Seq[(java.lang.Integer, String, String)]): DataFrame = {
+    import spark.implicits._
+    rows.map { case (p, ns, payload) =>
+      (p, ns, null.asInstanceOf[java.lang.Long], null.asInstanceOf[java.lang.Integer],
+        payload.getBytes("UTF-8"))
+    }.toDF("partition", "namespace", "parent_counter", "parent_partition", "data")
+  }
+
+  /** The two shapes of one request: driver-resident rows take the local
+    * path, the same rows checkpointed take the distributed path. */
+  private val producePaths: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "driver-local" -> identity[DataFrame],
+    "distributed" -> (_.localCheckpoint()))
+
+  private def files(root: String, partition: Int): Seq[String] = {
+    val dir = new Path(s"$root/default/partition=$partition")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).map(_.getPath.getName).toSeq.sorted
+  }
+
+  private def counters(df: DataFrame): Seq[Long] =
+    df.collect().map(_.getAs[Long]("event_counter")).toSeq.sorted
+
+  test("the two request shapes reach the two produce paths") {
+    val req = requestFrame(Seq((1, "/a", "x")))
+    // produce normalizes with casts; Spark folds them into local rows only
+    val local = producePaths.map { case (_, shape) =>
+      shape(req).select(col("partition").cast("int"))
+        .queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    }
+    assert(local == Seq(true, false))
+  }
+
+  for ((path, shape) <- producePaths) {
+    test(s"$path produce: counters stay contiguous across calls") {
+      val (e, _) = newEngine()
+      val first = e.produce("default", shape(requestFrame(Seq((1, "/a", "1"), (1, "/b", "2")))))
+      assert(counters(first) == Seq(1L, 2L))
+      val second = e.produce("default", shape(requestFrame(Seq((1, "/c", "3")))))
+      assert(counters(second) == Seq(3L))
+      assert(namespaces(e.consumeAll("default")) == Seq("/a", "/b", "/c"))
+      assert(e.status("default") == Map(1 -> 3L))
+      e.close()
+    }
+
+    test(s"$path produce: one batch spans partitions") {
+      val (e, root) = newEngine(partitions = 3)
+      val acked = e.produce("default",
+        shape(requestFrame((1 to 30).map(i => (Int.box(1 + i % 3), s"/mix/$i", s"p$i")))))
+      assert(counters(acked) == (1L to 30L))
+      val byPartition = e.consumeAll("default").collect()
+        .map(r => r.getAs[String]("namespace") -> r.getAs[Int]("partition")).toMap
+      (1 to 30).foreach(i => assert(byPartition(s"/mix/$i") == 1 + i % 3))
+      // one file per partition for a batch under the segment size
+      (1 to 3).foreach(p => assert(files(root, p).count(_.endsWith(".parquet")) == 1))
+      e.close()
+    }
+
+    test(s"$path produce: segmentMaxSizeBytes rolls one batch into files by the shared rule") {
+      val root = tempDir("flo-rotate")
+      val e = new FloEngine(spark, root)
+      e.createStream(EventStreamOptions("default", 1, segmentMaxSizeBytes = 600L))
+      e.produce("default",
+        shape(requestFrame((1 to 100).map(i => (Int.box(1), f"/seg/$i%03d", "x" * 40)))))
+      // 48 + 8 + 40 = 96 estimated bytes a row -> 6 rows a file -> 17 files
+      assert(files(root, 1).count(_.endsWith(".parquet")) == 17, files(root, 1))
+      assert(counters(e.consumeAll("default")) == (1L to 100L))
+      e.close()
+    }
+
+    test(s"$path produce: concurrent calls reserve disjoint counter ranges") {
+      val (e, _) = newEngine()
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.global
+      val futures = (1 to 4).map { t =>
+        Future(e.produce("default",
+          shape(requestFrame((1 to 25).map(i => (Int.box(1), s"/c/$t/$i", ""))))))
+      }
+      Await.result(Future.sequence(futures), 120.seconds)
+      assert(counters(e.consumeAll("default")) == (1L to 100L))
+      e.close()
+    }
+
+    test(s"$path produce: a lease usurped mid-produce aborts with nothing committed or staged") {
+      val (e, root) = newEngine()
+      val lease = s"$root/default/${FloEngine.WriterLeaseFile}"
+      // plants a foreign lease as the request rows are evaluated: after
+      // produce's lease check, before its commit edge
+      val usurp = udf { (ns: String) =>
+        val p = new Path(lease)
+        val out = p.getFileSystem(new org.apache.hadoop.conf.Configuration()).create(p, true)
+        try out.write("""{"owner":"usurper"}""".getBytes("UTF-8")) finally out.close()
+        ns
+      }
+      val req = shape(requestFrame(Seq((1, "/u/1", "a"), (1, "/u/2", "b"))))
+        .withColumn("namespace", usurp(col("namespace")))
+      val err = intercept[IllegalStateException](e.produce("default", req))
+      assert(err.getMessage.contains("BEFORE the commit"), err.getMessage)
+      // no committed file, no staged file, no checksum sidecar
+      assert(files(root, 1).isEmpty, files(root, 1))
+      assert(e.status("default") == Map(1 -> 0L))
+      e.close()
+    }
+
+    test(s"$path produce: a null partition is rejected before any counter is reserved") {
+      val (e, root) = newEngine()
+      e.produce("default", shape(requestFrame(Seq((1, "/ok/1", "")))))
+      val err = intercept[IllegalArgumentException] {
+        e.produce("default", shape(requestFrame(Seq((1, "/ok/2", ""), (null, "/bad", "")))))
+      }
+      assert(err.getMessage.contains("null `partition`"), err.getMessage)
+      // nothing written: the head is unchanged, status and consume still work
+      assert(e.status("default") == Map(1 -> 1L))
+      assert(namespaces(e.consumeAll("default")) == Seq("/ok/1"))
+      assert(!new java.io.File(s"$root/default/partition=__HIVE_DEFAULT_PARTITION__").exists())
+      // and nothing was reserved: the next event continues the sequence
+      assert(counters(e.produce("default", shape(requestFrame(Seq((1, "/ok/3", "")))))) == Seq(2L))
+      e.close()
+    }
+  }
+
+  test("both produce paths write identical parquet footers and ack schemas") {
+    import spark.implicits._
+    val req = Seq(
+      (1, "/f/root", null.asInstanceOf[java.lang.Long], null.asInstanceOf[java.lang.Integer],
+        "r".getBytes("UTF-8")),
+      (1, "/f/child", java.lang.Long.valueOf(1L), java.lang.Integer.valueOf(1),
+        "c".getBytes("UTF-8")))
+      .toDF("partition", "namespace", "parent_counter", "parent_partition", "data")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val outcomes = producePaths.map { case (_, shape) =>
+      val (e, root) = newEngine()
+      val acked = e.produce("default", shape(req))
+      val file = files(root, 1).filter(_.endsWith(".parquet")) match {
+        case Seq(one) => new Path(s"$root/default/partition=1/$one")
+        case other => fail(s"expected one file, got $other")
+      }
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      val ack = acked.collect()
+        .map(r => (r.getAs[Long]("event_counter"), r.getAs[String]("namespace"))).toSeq
+      e.close()
+      (meta.getSchema,
+        meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"),
+        acked.schema, ack)
+    }
+    val Seq(local, distributed) = outcomes
+    assert(local._1 == distributed._1, s"${local._1} vs ${distributed._1}")
+    assert(local._2 != null && local._2 == distributed._2, s"${local._2} vs ${distributed._2}")
+    assert(local._3 == distributed._3)
+    assert(local._4.sorted == distributed._4.sorted)
+  }
+
+  test("one produceStrings call plus its ack collect runs no Spark job") {
+    val (e, _) = newEngine()
+    // lease acquisition and counter recovery happen on the first call
+    e.produceStrings("default", 1, Seq("/warm" -> ""))
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("produce-under-test", "one produce and its ack")
+      val acked = try e.produceStrings("default", 1, Seq("/one" -> "payload")).collect()
+        finally sc.clearJobGroup()
+      assert(acked.map(_.getAs[Long]("event_counter")).toSeq == Seq(2L))
+      // the listener bus delivers in order: once this job is seen, every
+      // job the produce started has been seen too
+      sc.setJobGroup("sentinel", "drains the listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobGroups.contains("sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(jobGroups.contains("sentinel"))
+      assert(!jobGroups.contains("produce-under-test"), jobGroups)
+    } finally sc.removeSparkListener(listener)
+    e.close()
+  }
+
+  test("lease locks are keyed by the qualified lease path: `file:/x` and `/x` share one lock") {
+    val root = tempDir("flo-leasekey")
+    val plain = new FloEngine(spark, root)
+    val qualified = new FloEngine(spark, s"file:$root")
+    assert(plain.leaseLockKey("default") == qualified.leaseLockKey("default"))
+    assert(plain.leaseLockKey("default").startsWith("file:/"), plain.leaseLockKey("default"))
   }
 }
