@@ -16,7 +16,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
@@ -32,10 +33,17 @@ import graft.model.{FloSchema, VersionVector}
  * A stream is a directory of partition subdirs of parquet files:
  * {{{ <root>/<stream>/partition=<p>/&#42;.parquet }}}
  * The `partition=` layout makes Spark's partition pruning replace flo's
- * per-partition readers (SURVEY §1.5), and parquet min/max stats on
- * `event_counter` replace flo's in-memory counter→offset index
- * (partition/index.rs:24-36): a consume with a version-vector start skips
- * whole files below the requested counters.
+ * per-partition readers (SURVEY §1.5). A per-stream [[SegmentIndex]]
+ * replaces flo's in-memory counter→offset index (partition/index.rs:24-36):
+ * one entry per segment file, holding its `event_counter` min/max and
+ * `timestamp` max, read from the parquet footer once and kept under the
+ * key (path, length, modification time). Committed files are immutable and
+ * never reuse a name, so an entry cannot go stale; each listing drops the
+ * entries of files that retention or compaction removed. [[status]],
+ * counter recovery, [[consumerPosition]] and [[expireOldEvents]] answer
+ * from it, and a consume with a version-vector start (or any
+ * `event_counter` filter) plans only the files whose counter range can
+ * match, so the files below the requested counters are never opened.
  *
  * Scale notes (designed for a real cluster, tested on local):
  *  - produce picks its write path by where the request rows live: rows
@@ -75,6 +83,8 @@ final class FloEngine(
   spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
   private val highest = new ConcurrentHashMap[String, AtomicLong]()
+
+  private val segments = new SegmentIndex(spark.sparkContext)
 
   // per-stream commit lock: concurrent Spark append jobs to one path share
   // the _temporary staging dir (FileOutputCommitter), so file commits must
@@ -505,60 +515,18 @@ final class FloEngine(
 
   /** Per-partition head counters — `EventStreamStatus` (S7; reference:
     * connection_handler/connection_state.rs:94-114). Partitions with no
-    * events report head 0. */
+    * events report head 0. Answered from the segment index: one listing of
+    * the stream, plus a footer read only for files the index has not seen
+    * (flo's index recovery, S5, rebuilt from segment metadata — no column
+    * scan). */
   def status(stream: String): Map[Int, Long] = {
-    val declared = declaredPartitions(stream)
-    val observed = footerHeads(stream)
-    declared.map(p => p -> observed.getOrElse(p, 0L)).toMap ++ observed
+    val listing = segments.list(streamDir(stream))
+    val observed = segments.heads(streamDir(stream), listing.segments)
+    listing.partitions.map(p => p -> observed.getOrElse(p, 0L)).toMap ++ observed
   }
 
-  /** Per-partition max event_counter from parquet FOOTER statistics only —
-    * no column scan. This is flo's index-recovery equivalent (S5,
-    * partition/index.rs rebuilt from segment metadata): the footers are the
-    * index. Spark's own aggregate pushdown would do the same but only on
-    * the v2 parquet path, which is not the default. */
-  private def footerHeads(stream: String): Map[Int, Long] = {
-    val f = fs(root)
-    val byPartition = declaredPartitions(stream).flatMap { p =>
-      f.listStatus(new Path(s"${streamDir(stream)}/partition=$p"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(st => p -> st.getPath)
-    }
-    val maxes = footerMaxes(byPartition.map(_._2), "event_counter")
-    byPartition
-      .flatMap { case (p, path) => maxes(path.toString).map(p -> _) }
-      .groupMapReduce(_._1)(_._2)(math.max)
-  }
-
-  /** Footer-stats maxima for many files: a driver loop for small streams, a
-    * Spark job (executor-side footer reads) past the threshold — recovery
-    * and retention stay metadata-only but parallel on 100k-file streams. */
-  private def footerMaxes(files: Seq[Path], column: String): Map[String, Option[Long]] =
-    if (files.isEmpty) Map.empty
-    else if (files.length <= FloEngine.DriverFooterThreshold) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      files.map(p => p.toString -> FloEngine.footerColumnMax(p, conf, column)).toMap
-    } else {
-      val paths = files.map(_.toString)
-      // ship the session's hadoop conf (spark.hadoop.* settings, credentials)
-      // to the executor-side footer reads
-      val confBc = spark.sparkContext.broadcast(
-        new graft.util.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-      spark.sparkContext.parallelize(paths, math.min(paths.size, 64))
-        .mapPartitions { it =>
-          val conf = confBc.value.value
-          it.map(p => p -> FloEngine.footerColumnMax(new Path(p), conf, column))
-        }.collect().toMap
-    }
-
-  private def declaredPartitions(stream: String): Seq[Int] = {
-    val p = new Path(streamDir(stream))
-    val f = fs(root)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath.getName).collect {
-      case n if n.startsWith("partition=") => n.stripPrefix("partition=").toInt
-    }.toSeq.sorted
-  }
+  private def declaredPartitions(stream: String): Seq[Int] =
+    segments.partitions(streamDir(stream))
 
   // ---------------------------------------------------------------- produce
 
@@ -614,7 +582,8 @@ final class FloEngine(
    * ids and timestamps — like flo's `AckEvent{op_id, event_id}` carries
    * the assigned id. On the local path it is a `LocalRelation` of those
    * rows, so collecting the ack runs no job and lists no files; on the
-   * distributed path it reads the committed counter range back.
+   * distributed path it reads the committed counter range back, and the
+   * segment index plans only the files that hold that range.
    */
   def produce(stream: String, requests: DataFrame): DataFrame = {
     if (!streamExists(stream)) throw new NoSuchStream(stream)
@@ -873,25 +842,39 @@ final class FloEngine(
 
   private def highestCounter(stream: String): AtomicLong =
     highest.computeIfAbsent(stream, _ => {
-      // recovery (S5): footer stats only, no data scan
-      val heads = footerHeads(stream)
+      // recovery (S5): the segment index's footer stats, no data scan
+      val heads = segments.heads(streamDir(stream), segments.list(streamDir(stream)).segments)
       new AtomicLong(if (heads.isEmpty) 0L else heads.values.max)
     })
 
   // ---------------------------------------------------------------- consume
 
-  /** The raw batch view of a stream (S2/S3: all segments, all partitions).
-    * Unknown stream names error like the reference's `NoSuchStream`
-    * (engine/mod.rs:69-82). */
-  def read(stream: String): DataFrame = {
+  /** The raw batch view of a stream (S2/S3: all segments, all partitions),
+    * `partition` last as a partitioned parquet scan reports it. Unknown
+    * stream names error like the reference's `NoSuchStream`
+    * (engine/mod.rs:69-82).
+    *
+    * The segment files are listed when `read` is called. The scan plans
+    * through a [[StreamFileIndex]] over that listing, which drops whole
+    * partitions against pushed `partition` filters and whole files against
+    * pushed `event_counter` filters, using the segment index's footer
+    * stats — so a seek, a produce ack or any counter filter never opens a
+    * file whose counter range cannot match. */
+  def read(stream: String): DataFrame = scan(stream, floors = Map.empty)
+
+  /** [[read]], with a version vector's entries as per-partition floors
+    * for file pruning (see [[StreamFileIndex]]); the caller applies the
+    * vector's predicate on top. */
+  private def scan(stream: String, floors: Map[Int, Long]): DataFrame = {
     if (!streamExists(stream)) throw new NoSuchStream(stream)
     // readers race the retention janitor (SURVEY §7.3 hard part 3): a file
     // listed at plan time may be expired before the task reads it — skip it
     // (flo's equivalent: dropped segments release on mmap refcount,
     // mmap.rs:73-84; readers holding no segment just see it gone)
-    spark.read.schema(FloSchema.eventType)
-      .option("ignoreMissingFiles", "true")
-      .parquet(streamDir(stream))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new StreamFileIndex(segments, streamDir(stream), floors),
+      StreamFileIndex.PartitionSchema, SegmentDataSchema, bucketSpec = None,
+      new ParquetFileFormat, Map("ignoreMissingFiles" -> "true"))(spark))
   }
 
   /** Typed view of a stream (SURVEY §1.5: case-class envelope with
@@ -922,16 +905,19 @@ final class FloEngine(
    * absent partitions are not read at all
    * (connection_handler/consumer/mod.rs:91-107).
    *
-   * The returned plan pushes both predicates into the scan: `partition`
-   * pruning from the dir layout, `event_counter` row-group skipping from
-   * parquet stats — the flo index seek (S4) for free.
+   * The returned plan is the flo index seek (S4): `partition` pruning
+   * from the dir layout, then whole-file pruning from the segment index —
+   * a file of partition `p` is planned only when its counter range reaches
+   * above the vector's entry for `p` (see [[read]]) — then row-group
+   * skipping from parquet stats inside the files that remain. Files below
+   * the requested counters are never opened.
    */
   def consume(
       stream: String,
       namespaceGlob: String = "/**/*",
       vv: VersionVector,
       maxEvents: Option[Long] = None): DataFrame = {
-    val base = read(stream)
+    val base = scan(stream, vv.entries)
       .filter(vv.toPredicate(col("partition"), col("event_counter")))
       .filter(ns_glob(col("namespace"), namespaceGlob))
       .orderBy(col("event_counter"), col("partition"))
@@ -1208,9 +1194,14 @@ final class FloEngine(
    * Streaming checkpoint — flo's cursor introspection (the vv a client
    * would pass to resume, sync/mod.rs:116-144). Reads the file-source log
    * (`sources/0/`), collects every processed file, and folds their max
-   * counters per partition. Bridges the streaming and batch APIs: a batch
+   * counters per partition from the segment index — no Spark job. Bridges
+   * the streaming and batch APIs: a batch
    * `consume(stream, glob, consumerPosition(ckpt))` picks up exactly where
    * the streaming query left off.
+   *
+   * Processed files that retention or compaction removed since are
+   * skipped; a partition whose processed files are all gone keeps a 0
+   * entry, so a resume re-delivers that partition and never skips it.
    */
   def consumerPosition(checkpointDir: String): VersionVector = {
     val f = fs(checkpointDir)
@@ -1223,15 +1214,18 @@ final class FloEngine(
       finally in.close()
       pathRe.findAllMatchIn(content).map(_.group(1)).toSeq
     }.distinct.filter(_.endsWith(".parquet"))
-    if (processed.isEmpty) return VersionVector.empty
-    // explicit file paths drop dir-derived partition values unless basePath
-    // anchors the partition discovery at the stream root
-    val basePath = processed.head.replaceAll("/partition=\\d+/[^/]+$", "")
-    val heads = spark.read.schema(FloSchema.eventType)
-      .option("basePath", basePath)
-      .parquet(processed.toSeq: _*)
-      .groupBy(col("partition")).agg(max("event_counter").as("head"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      .map { p =>
+        val path = new Path(new java.net.URI(p))
+        path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path)
+      }
+    // a processed file sits at <stream dir>/partition=<p>/<name>
+    val heads = processed.groupBy(_.getParent.getParent).toSeq.flatMap { case (dir, files) =>
+      val wanted = files.map(_.toString).toSet
+      val present = segments.list(dir.toString).segments.filter(s => wanted(s.path))
+      files.map(_.getParent.getName).distinct.collect {
+        case n if n.startsWith("partition=") => n.stripPrefix("partition=").toInt -> 0L
+      } ++ segments.heads(dir.toString, present)
+    }.groupMapReduce(_._1)(_._2)(math.max)
     VersionVector(heads)
   }
 
@@ -1285,10 +1279,9 @@ final class FloEngine(
    * partition dir instead of stranded in the hidden temp dir.
    */
   def compact(stream: String, filesPerPartition: Int = 1): Unit = commitLock(stream).synchronized {
-    val f = fs(root)
-    declaredPartitions(stream).foreach { p =>
-      val files = f.listStatus(new Path(s"${streamDir(stream)}/partition=$p"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    val listing = segments.list(streamDir(stream))
+    listing.partitions.foreach { p =>
+      val files = listing.in(p).map(_.status)
       if (files.length > filesPerPartition)
         foldSegmentFiles(stream, p, files, filesPerPartition, tag = "c")
     }
@@ -1301,7 +1294,7 @@ final class FloEngine(
     * and the counter dedup on the next fold self-heals a torn swap. A
     * failed rename-in aborts BEFORE any original is deleted. */
   private def foldSegmentFiles(
-      stream: String, p: Int, files: Array[org.apache.hadoop.fs.FileStatus],
+      stream: String, p: Int, files: Seq[org.apache.hadoop.fs.FileStatus],
       nOut: Int, tag: String): Unit = {
     val f = fs(root)
     val dir = s"${streamDir(stream)}/partition=$p"
@@ -1312,7 +1305,7 @@ final class FloEngine(
       FloSchema.eventType.filterNot(_.name == "partition"))
     spark.read.schema(innerSchema)
       .option("ignoreMissingFiles", "true") // tolerate a racing janitor
-      .parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
+      .parquet(files.map(_.getPath.toString): _*)
       // counters are unique within a partition, so duplicates can only be
       // leftovers of a torn rename-in/delete swap from a crashed fold —
       // re-running self-heals instead of preserving them forever
@@ -1348,13 +1341,11 @@ final class FloEngine(
   def compactSmall(
       stream: String,
       minFileBytes: Long = 1L << 20): Map[Int, Int] = commitLock(stream).synchronized {
-    val f = fs(root)
     val segBytes = streamOptions(stream)
       .map(_.segmentMaxSizeBytes).getOrElse(1L << 30)
-    declaredPartitions(stream).map { p =>
-      val small = f.listStatus(new Path(s"${streamDir(stream)}/partition=$p"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
-          s.getLen < minFileBytes)
+    val listing = segments.list(streamDir(stream))
+    listing.partitions.map { p =>
+      val small = listing.in(p).map(_.status).filter(_.getLen < minFileBytes)
       if (small.length > 1) {
         val nOut = math.max(1,
           math.ceil(small.map(_.getLen).sum.toDouble / segBytes).toInt)
@@ -1376,27 +1367,23 @@ final class FloEngine(
   def expireOldEvents(stream: String, cutoff: java.sql.Timestamp): Seq[String] = commitLock(stream).synchronized {
     val f = fs(root)
     val cutoffMicros = cutoff.getTime * 1000L
-    val candidates = declaredPartitions(stream).flatMap { p =>
-      f.listStatus(new Path(s"${streamDir(stream)}/partition=$p"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-    }
-    val maxes = footerMaxes(candidates, "timestamp")
-    val expired = candidates.filter { path =>
-      maxes(path.toString) match {
+    val candidates = segments.list(streamDir(stream)).segments
+    val stats = segments.stats(streamDir(stream), candidates)
+    val expired = candidates.map(_.path).filter { path =>
+      // a file that vanished since listing is nobody's to delete — skip it
+      stats.get(path).exists(_.timestampMax match {
         case Some(maxMicros) => maxMicros < cutoffMicros
-        // no stats (legacy INT96 files): scan just that file; a file that
-        // vanished since listing is nobody's to delete — skip it
+        // no stats (legacy INT96 files): scan just that file
         case None =>
-          try spark.read.parquet(path.toString)
+          try spark.read.parquet(path)
             .agg(max("timestamp")).collect().head match {
             case r if r.isNullAt(0) => true // empty file: expired
             case r => r.getTimestamp(0).before(cutoff)
           } catch { case scala.util.control.NonFatal(_) => false }
-      }
+      })
     }
-    expired.foreach(f.delete(_, false))
-    expired.map(_.toString)
+    expired.foreach(p => f.delete(new Path(p), false))
+    expired
   }
 }
 
@@ -1491,6 +1478,10 @@ object FloEngine {
     * the same schema. */
   private val AckSchema = StructType(FloSchema.eventType.map(_.copy(nullable = true)))
 
+  /** The columns stored in a segment file (`partition` lives in its dir). */
+  private val SegmentDataSchema = StructType(
+    FloSchema.eventType.filterNot(_.name == "partition").map(_.copy(nullable = true)))
+
   /** Encoded-size estimate of one event for segment rotation. */
   private def encodedRowBytes(namespace: String, data: Array[Byte]): Long =
     48L + (if (namespace == null) 0 else namespace.length) +
@@ -1503,38 +1494,6 @@ object FloEngine {
     override protected def self(): LocalParquetWriterBuilder = this
     override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
       new ParquetWriteSupport()
-  }
-
-  /** Footer-statistics max of a long-encoded column (counter, micros
-    * timestamp) for one file; None when any row group lacks stats OR the
-    * file vanished under us (a racing janitor delete — status() readers
-    * must not crash on it, mirroring ignoreMissingFiles on the scan path).
-    * Static (conf passed in) so executor tasks can call it. */
-  private[engine] def footerColumnMax(
-      file: Path,
-      conf: org.apache.hadoop.conf.Configuration,
-      column: String): Option[Long] = try {
-    import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try {
-      val perBlock = reader.getFooter.getBlocks.asScala.map { block =>
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == column)
-          .flatMap { c =>
-            val stats = c.getStatistics
-            if (stats == null || !stats.hasNonNullValue) None
-            else stats.genericGetMax match {
-              case n: Number => Some(n.longValue)
-              case _ => None
-            }
-          }
-      }
-      if (perBlock.isEmpty || perBlock.exists(_.isEmpty)) None
-      else Some(perBlock.flatten.max)
-    } finally reader.close()
-  } catch {
-    case _: java.io.FileNotFoundException => None
   }
 
   /** Stream options (reference: engine/event_stream/mod.rs:17-37, defaults

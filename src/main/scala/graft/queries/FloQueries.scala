@@ -271,7 +271,10 @@ object FloQueries {
     "flo_consume_glob" ->
       s"""$floCte
          |SELECT event_counter, "partition", namespace FROM flo
-         |WHERE namespace LIKE '/events/p%'
+         |WHERE (("partition" = 1 AND event_counter > 0)
+         |    OR ("partition" = 2 AND event_counter > 0)
+         |    OR ("partition" = 3 AND event_counter > 0))
+         |  AND namespace LIKE '/events/p%'
          |ORDER BY event_counter""".stripMargin,
 
     "flo_consume_vv_seek" ->

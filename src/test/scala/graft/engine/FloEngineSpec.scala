@@ -943,4 +943,123 @@ class FloEngineSpec extends SparkSuite {
     assert(plain.leaseLockKey("default") == qualified.leaseLockKey("default"))
     assert(plain.leaseLockKey("default").startsWith("file:/"), plain.leaseLockKey("default"))
   }
+
+  // ------------------------------------------------------------ segment index
+
+  /** (counter, partition, namespace) rows of a frame, in counter order. */
+  private def canon(df: DataFrame): Seq[(Long, Int, String)] = df.collect()
+    .map(r => (r.getAs[Long]("event_counter"), r.getAs[Int]("partition"),
+      r.getAs[String]("namespace"))).toSeq.sorted
+
+  /** The files the query's parquet scans opened: the scan node's
+    * `number of files read` metric, summed, after running it. */
+  private def filesRead(df: DataFrame): Long = {
+    df.collect()
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+      }.sum
+  }
+
+  /** Bytes this thread has read from the local filesystem so far. */
+  private def localBytesRead(): Long =
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.toArray
+      .collect { case st: org.apache.hadoop.fs.FileSystem.Statistics if st.getScheme == "file" =>
+        st.getThreadStatistics.getBytesRead
+      }.sum
+
+  test("segment index: warm and fresh engines agree on status and every version-vector consume") {
+    val (e, root) = newEngine(partitions = 3)
+    def batch(tag: String, n: Int) =
+      requestFrame((1 to n).map(i => (Int.box(1 + i % 3), s"/ix/$tag/$i", s"$tag$i")))
+    // files the retention janitor will drop, seen by the index first
+    e.produceStrings("default", 1, Seq("/ix/old/1" -> "", "/ix/old/2" -> ""))
+    e.produceStrings("default", 2, Seq("/ix/old/3" -> ""))
+    e.status("default")
+    Thread.sleep(30)
+    val cutoff = new java.sql.Timestamp(System.currentTimeMillis())
+    Thread.sleep(30)
+    e.produce("default", batch("d1", 30).localCheckpoint())
+    (1 to 3).foreach(i => e.produceStrings("default", 1, Seq(s"/ix/l$i" -> "")))
+    assert(e.expireOldEvents("default", cutoff).size == 2)
+    e.status("default")
+    assert(e.compactSmall("default", minFileBytes = 1L << 30).values.sum > 0)
+    e.produce("default", batch("l2", 12))
+    e.compact("default")
+    e.produce("default", batch("d2", 9).localCheckpoint())
+    e.produceStrings("default", 3, Seq("/ix/tail" -> ""))
+
+    val truth = spark.read.schema(graft.model.FloSchema.eventType).parquet(s"$root/default")
+    val heads = e.status("default")
+    assert(heads == truth.groupBy("partition").agg(max("event_counter")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    val fresh = new FloEngine(spark, root)
+    assert(fresh.status("default") == heads)
+
+    val vectors = Seq(
+      "above every head" -> VersionVector(heads.map { case (p, h) => p -> (h + 100) }),
+      "partition 2 left out" -> VersionVector(1 -> heads(1) / 2, 3 -> 0L),
+      "zero" -> VersionVector.zero(Seq(1, 2, 3)),
+      "mid-stream" -> VersionVector(heads.map { case (p, h) => p -> (h - 6) }))
+    vectors.foreach { case (name, vv) =>
+      val expected = canon(truth.filter(vv.toPredicate(col("partition"), col("event_counter"))))
+      val (warm, cold) = (e.consume("default", "/**/*", vv), fresh.consume("default", "/**/*", vv))
+      assert(canon(warm) == expected, name)
+      assert(canon(cold) == expected, name)
+      assert(warm.schema == e.read("default").schema && cold.schema == warm.schema, name)
+    }
+    assert(e.consume("default", "/**/*", vectors.head._2).isEmpty)
+    e.close()
+  }
+
+  test("segment index: a second engine on the same root sees the writer's new files") {
+    val (writer, root) = newEngine(partitions = 2)
+    writer.produceStrings("default", 1, Seq("/w/1" -> "", "/w/2" -> ""))
+    val reader = new FloEngine(spark, root)
+    assert(reader.status("default") == Map(1 -> 2L, 2 -> 0L))
+    val from = VersionVector(1 -> 2L, 2 -> 0L)
+    assert(reader.consume("default", "/**/*", from).isEmpty)
+    writer.produceStrings("default", 2, Seq("/w/3" -> ""))
+    writer.produce("default", requestFrame(Seq((1, "/w/4", ""))).localCheckpoint())
+    assert(reader.status("default") == Map(1 -> 4L, 2 -> 3L))
+    assert(namespaces(reader.consume("default", "/**/*", from)) == Seq("/w/3", "/w/4"))
+    writer.close()
+  }
+
+  test("segment index: a seek past all but the newest batch opens only that batch's files") {
+    val (e, _) = newEngine(partitions = 3)
+    // one request across all partitions per batch: one file per partition
+    def batch(b: Int) = requestFrame((1 to 9).map(i => (Int.box(1 + i % 3), s"/b$b/$i", "")))
+    (1 to 4).foreach(b => e.produce("default", batch(b)))
+    val before = e.status("default").values.max
+    e.produce("default", batch(5))
+    assert(filesRead(e.consumeAll("default")) == 15)
+    val seek = e.consume("default", "/**/*", VersionVector((1 to 3).map(_ -> before): _*))
+    assert(filesRead(seek) == 3)
+    assert(seek.count() == 9)
+    // a vector that leaves partitions out and sits at different heads:
+    // each partition is pruned at its own entry
+    val heads = e.status("default")
+    assert(filesRead(e.consume("default", "/**/*", VersionVector(1 -> 0L, 2 -> before))) == 6)
+    assert(filesRead(e.consume("default", "/**/*", VersionVector(heads))) == 0)
+    // a user filter on the counter prunes the same way
+    assert(filesRead(e.read("default").filter(col("event_counter") === before + 1)) == 1)
+    // the distributed path's ack reads back only the files it committed
+    val ack = e.produce("default", batch(6).localCheckpoint())
+    assert(filesRead(ack) == 3 && ack.count() == 9)
+    e.close()
+  }
+
+  test("segment index: a second status on an unchanged stream opens no footer") {
+    val (writer, root) = newEngine(partitions = 2)
+    (1 to 3).foreach(i => writer.produceStrings("default", 1 + i % 2, Seq(s"/s/$i" -> "")))
+    writer.close()
+    val e = new FloEngine(spark, root)
+    val cold = localBytesRead()
+    val heads = e.status("default")
+    val warm = localBytesRead()
+    assert(e.status("default") == heads)
+    assert(warm > cold, "the first status reads each footer once")
+    assert(localBytesRead() == warm, "the second status read file bytes")
+  }
 }

@@ -189,6 +189,34 @@ class StreamingSpec extends SparkSuite {
     assert(resumed.map(_.getAs[String]("namespace")).toSeq == Seq("/p/new"))
   }
 
+  test("consumerPosition skips processed files that retention removed; a resume re-delivers, never skips") {
+    val (e, _) = newEngine(partitions = 2)
+    val ckpt = tempDir("flo-pos-expired")
+    e.produceStrings("default", 2, Seq("/q/old" -> ""))
+    e.produceStrings("default", 1, Seq("/p/old" -> ""))
+    Thread.sleep(30)
+    val cutoff = new java.sql.Timestamp(System.currentTimeMillis())
+    Thread.sleep(30)
+    e.produceStrings("default", 1, Seq("/p/1" -> "", "/p/2" -> ""))
+    val q = e.consumeStream("default")
+      .writeStream.format("memory").queryName("posexpired")
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(60000)
+    assert(spark.table("posexpired").count() == 4)
+
+    // both old files were processed; partition 2's only file is now gone
+    assert(e.expireOldEvents("default", cutoff).size == 2)
+    val vv = e.consumerPosition(ckpt)
+    assert(vv.entries == Map(1 -> 4L, 2 -> 0L), vv)
+
+    e.produceStrings("default", 1, Seq("/p/new" -> ""))
+    e.produceStrings("default", 2, Seq("/q/new" -> ""))
+    val resumed = e.consume("default", "/**/*", vv).collect()
+    assert(resumed.map(_.getAs[String]("namespace")).toSeq == Seq("/p/new", "/q/new"))
+  }
+
   test("stream-static dimension join enriches consumed events (§2.3)") {
     val (e, _) = newEngine(partitions = 2)
     e.produceStrings("default", 1, Seq("/j/a" -> ""))
