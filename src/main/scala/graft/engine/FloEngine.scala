@@ -860,19 +860,14 @@ final class FloEngine(
     * pushed `event_counter` filters, using the segment index's footer
     * stats — so a seek, a produce ack or any counter filter never opens a
     * file whose counter range cannot match. */
-  def read(stream: String): DataFrame = scan(stream, floors = Map.empty)
-
-  /** [[read]], with a version vector's entries as per-partition floors
-    * for file pruning (see [[StreamFileIndex]]); the caller applies the
-    * vector's predicate on top. */
-  private def scan(stream: String, floors: Map[Int, Long]): DataFrame = {
+  def read(stream: String): DataFrame = {
     if (!streamExists(stream)) throw new NoSuchStream(stream)
     // readers race the retention janitor (SURVEY §7.3 hard part 3): a file
     // listed at plan time may be expired before the task reads it — skip it
     // (flo's equivalent: dropped segments release on mmap refcount,
     // mmap.rs:73-84; readers holding no segment just see it gone)
     spark.baseRelationToDataFrame(HadoopFsRelation(
-      new StreamFileIndex(segments, streamDir(stream), floors),
+      new StreamFileIndex(segments, streamDir(stream)),
       StreamFileIndex.PartitionSchema, SegmentDataSchema, bucketSpec = None,
       new ParquetFileFormat, Map("ignoreMissingFiles" -> "true"))(spark))
   }
@@ -907,9 +902,10 @@ final class FloEngine(
    *
    * The returned plan is the flo index seek (S4): `partition` pruning
    * from the dir layout, then whole-file pruning from the segment index —
-   * a file of partition `p` is planned only when its counter range reaches
-   * above the vector's entry for `p` (see [[read]]) — then row-group
-   * skipping from parquet stats inside the files that remain. Files below
+   * a file is planned only when its counter range reaches above the
+   * vector's smallest entry, the filter Catalyst pushes down (see [[read]])
+   * — then row-group skipping from parquet stats inside the files that
+   * remain. When every entry is equal (a seek to one head), files below
    * the requested counters are never opened.
    */
   def consume(
@@ -917,7 +913,7 @@ final class FloEngine(
       namespaceGlob: String = "/**/*",
       vv: VersionVector,
       maxEvents: Option[Long] = None): DataFrame = {
-    val base = scan(stream, vv.entries)
+    val base = read(stream)
       .filter(vv.toPredicate(col("partition"), col("event_counter")))
       .filter(ns_glob(col("namespace"), namespaceGlob))
       .orderBy(col("event_counter"), col("partition"))

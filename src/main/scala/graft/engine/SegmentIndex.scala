@@ -13,7 +13,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** One committed segment file of a stream: `partition=<p>/<name>.parquet`. */
 private[engine] final case class Segment(partition: Int, status: FileStatus) {
@@ -191,18 +191,15 @@ private[engine] object SegmentIndex {
  * seek or a produce ack plans (and opens) only the files that hold its
  * counters.
  *
- * A pushed counter filter cannot name the partition it came with (Catalyst
- * splits `partition = p AND event_counter > c` into a partition filter and
- * a data filter), so a version-vector consume also hands its vector in as
- * `floors`: partition `p` admits only counters above `floors(p)`, which the
- * consume's own filter implies. Footer stats are fetched only where the
- * admitted range can prune a file (a zero-vector or unfiltered scan reads
- * none). Two indexes are equal when they cover the same stream dir with
- * the same floors, as Spark's own file index is equal by its root paths,
- * so cached reads of a stream keep matching.
+ * A version-vector consume pushes the hull of its per-partition predicates
+ * (`event_counter > c1 OR event_counter > c2 ...`), so files are pruned at
+ * the vector's smallest entry. Footer stats are fetched only where the
+ * pushed range can prune a file (a zero-vector or unfiltered scan reads
+ * none). Two indexes are equal when they cover the same stream dir, as
+ * Spark's own file index is equal by its root paths, so cached reads of a
+ * stream keep matching.
  */
-private[engine] final class StreamFileIndex(
-    index: SegmentIndex, streamDir: String, val floors: Map[Int, Long] = Map.empty)
+private[engine] final class StreamFileIndex(index: SegmentIndex, streamDir: String)
     extends FileIndex {
 
   @volatile private var listing = index.list(streamDir)
@@ -220,29 +217,28 @@ private[engine] final class StreamFileIndex(
   override def listFiles(
       partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val keep = StreamFileIndex.partitionPredicate(partitionFilters)
-    val pushed = CounterRange(dataFilters)
-    val ranges = listing.partitions.filter(keep).map { p =>
-      p -> floors.get(p).fold(pushed)(f => CounterRange.intersect(pushed, CounterRange.above(f)))
-    }.toMap
-    val candidates = listing.segments.filter(s => ranges.get(s.partition).exists(CounterRange.nonEmpty))
-    val toCheck = candidates.filter(s => CounterRange.prunes(ranges(s.partition)))
-    val stats = index.stats(streamDir, toCheck)
-    val files = candidates.filter { s =>
-      val range = ranges(s.partition)
-      !CounterRange.prunes(range) ||
-        stats.get(s.path).exists(_.counter.forall(CounterRange.overlaps(range, _)))
-    }
+    val range = CounterRange(dataFilters)
+    val candidates =
+      if (CounterRange.nonEmpty(range)) listing.segments.filter(s => keep(s.partition))
+      else Seq.empty
+    val files =
+      if (!CounterRange.prunes(range)) candidates
+      else {
+        val stats = index.stats(streamDir, candidates)
+        candidates.filter(s =>
+          stats.get(s.path).exists(_.counter.forall(CounterRange.overlaps(range, _))))
+      }
     files.groupBy(_.partition).toSeq.sortBy(_._1).map { case (p, ss) =>
       PartitionDirectory(InternalRow(p), ss.map(_.status).toArray)
     }
   }
 
   override def equals(other: Any): Boolean = other match {
-    case o: StreamFileIndex => rootPaths == o.rootPaths && floors == o.floors
+    case o: StreamFileIndex => rootPaths == o.rootPaths
     case _ => false
   }
 
-  override def hashCode(): Int = (rootPaths, floors).hashCode()
+  override def hashCode(): Int = rootPaths.hashCode()
 }
 
 private[engine] object StreamFileIndex {
@@ -261,7 +257,7 @@ private[engine] object StreamFileIndex {
 
 /**
  * The inclusive `event_counter` interval a conjunction of pushed filters
- * admits: comparisons against integral literals, `IN`, and their
+ * admits: comparisons against bigint literals (either side), `IN`, and their
  * `AND`/`OR` combinations (an `OR` keeps the hull of its sides); any other
  * shape admits every counter. An empty interval has `lo > hi`.
  */
@@ -285,14 +281,14 @@ private[engine] object CounterRange {
   def overlaps(r: Range, file: Range): Boolean =
     math.max(r._1, file._1) <= math.min(r._2, file._2)
 
-  def intersect(a: Range, b: Range): Range = (math.max(a._1, b._1), math.min(a._2, b._2))
+  private def intersect(a: Range, b: Range): Range = (math.max(a._1, b._1), math.min(a._2, b._2))
 
   private def hull(a: Range, b: Range): Range =
     if (!nonEmpty(a)) b else if (!nonEmpty(b)) a
     else (math.min(a._1, b._1), math.max(a._2, b._2))
 
   /** Counters strictly above `v`. */
-  def above(v: Long): Range = if (v == Long.MaxValue) Empty else (v + 1, Long.MaxValue)
+  private def above(v: Long): Range = if (v == Long.MaxValue) Empty else (v + 1, Long.MaxValue)
 
   private def atLeast(v: Long): Range = (v, Long.MaxValue)
 
@@ -310,8 +306,9 @@ private[engine] object CounterRange {
 
   private object Value {
     def unapply(e: Expression): Option[Long] = e match {
-      case Literal(v, LongType | IntegerType | ShortType | ByteType) if v != null =>
-        Some(v.asInstanceOf[Number].longValue)
+      // type coercion casts every literal compared with the LongType
+      // counter to bigint, and constant folding leaves a Long literal
+      case Literal(v: Long, LongType) => Some(v)
       case _ => None
     }
   }
